@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * columnar (Parquet) sink + optional index sidecar.
   *
   * The reference's whole-file-in-RAM pipeline (`index.js:552`) becomes
-  * two Spark jobs: a bounded sampling aggregate that decides the schema
+  * two Spark phases: bounded sampling aggregates that decide the schema
   * (TypeInference.infer) and one full declarative pass that casts and
   * writes — the 100 TB shape: no rows ever reach the driver, the write
   * is embarrassingly parallel, and Parquet supplies the dictionary
@@ -75,7 +75,7 @@ object Collimate {
   def write(result: Result, outDir: String, opts: Options = Options()): Unit = {
     result.df.write.mode("overwrite").parquet(s"$outDir/data.parquet")
     if (opts.writeIndex) {
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      def q(s: String) = graft.sources.RawColumnarSink.jsonStr(s)
       val entries = result.schema.fields.map { f =>
         s"${q(f.name)}: {" +
           s"${q("column")}: ${q(f.sanitized)}, " +

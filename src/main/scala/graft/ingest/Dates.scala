@@ -58,7 +58,11 @@ object Dates {
     *  2. Cost: `try_to_date` rejects a non-matching value via an
     *     internal throw/catch — the inference agg was measured at
     *     ~160 core-seconds on a 180k-row × 16-col prefix, almost all
-    *     of it failed-parse exception machinery (§9o). The regex
+    *     of it failed-parse exception machinery (§9o). The numeric
+    *     `try_cast`s pay the same way (Spark 4.1 runs a TRY cast through
+    *     the ANSI path and catches the error: ~8 µs per non-integer cell
+    *     for BIGINT, a `NumberFormatException` per non-numeric cell for
+    *     DOUBLE), so TypeInference guards them likewise. The regex
     *     fails at codegen speed; the expensive parse now runs only on
     *     values whose shape already matches, i.e. at most one format
     *     per value for Y-first dates (D-first `01-02-1994` still
@@ -83,22 +87,24 @@ object Dates {
     "yyyy/M/d H:m:s" ->
       "^\\d{4}/\\d{1,2}/\\d{1,2} \\d{1,2}:\\d{1,2}:\\d{1,2}$")
 
-  private def guarded(c: Column, fmt: String): Column =
-    c.rlike(GuardRe(fmt))
+  /** The cheap half of [[parses]]: the reference's candidate length
+    * 8–10 (`index.js:186,306`) and the format's guard. */
+  private[ingest] def dateShaped(c: Column, fmt: String): Column =
+    length(c).between(8, 10) && c.rlike(GuardRe(fmt))
 
-  /** 1 iff `c` (non-null) strictly parses with `fmt` and has the
-    * reference's candidate length 8–10 (`index.js:186,306`). */
+  /** The cheap half of [[tparses]]: candidate length 14 (minimal
+    * `yyyy-M-d H:m:s`) to 23 (full fraction) and the format's guard. */
+  private[ingest] def tsShaped(c: Column, fmt: String): Column =
+    length(c).between(14, 23) && c.rlike(GuardRe(fmt))
+
+  /** True iff `c` (non-null) has a candidate shape for `fmt` and
+    * strictly parses with it. */
   def parses(c: Column, fmt: String): Column =
-    when(length(c).between(8, 10) && guarded(c, fmt) &&
-      try_to_date(c, fmt).isNotNull, 1)
-      .otherwise(0)
+    dateShaped(c, fmt) && try_to_date(c, fmt).isNotNull
 
-  /** Timestamp analogue of [[parses]]: candidate length 14 (minimal
-    * `yyyy-M-d H:m:s`) to 23 (full fraction), strict parse. */
+  /** Timestamp analogue of [[parses]]. */
   def tparses(c: Column, fmt: String): Column =
-    when(length(c).between(14, 23) && guarded(c, fmt) &&
-      try_to_timestamp(c, lit(fmt)).isNotNull, 1)
-      .otherwise(0)
+    tsShaped(c, fmt) && try_to_timestamp(c, lit(fmt)).isNotNull
 
   /** Normalize with a locked format; unparseable → NULL (intended
     * semantics for Q6). */

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,18 +20,23 @@ case class IngestSchema(
     categoricalThreshold: Double)
 
 /** Schema inference (reference O4/O5, `index.js:146-337`), re-expressed
-  * as ONE Spark aggregation over a bounded prefix of the data.
+  * as Spark aggregations over a bounded prefix of the data.
   *
   * The reference seeds a type from row 0 then demotes while scanning the
   * first `scan` rows (`scan = N<1000 ? N : max(1000, 0.3N)`,
   * `index.js:220-221`). Seed-then-demote over a prefix is equivalent to
   * evaluating the whole prefix at once on the lattice
-  * int → double → string, which is what we do: a single `agg` computes,
-  * per column, the counts of values that survive `try_cast` at each
-  * lattice level, per-format strict date-parse counts, and the distinct
-  * count — so inference costs exactly one job regardless of column count
-  * (SURVEY.md §7 "inference at 100 TB": never one job per column, never
-  * a driver-side collect of rows).
+  * int → double → string, which is what we do. Two collects, whatever
+  * the column count (SURVEY.md §7 "inference at 100 TB": never one job
+  * per column, never a driver-side collect of rows):
+  *
+  *  1. per-partition row counts (the full row count and the quotas of
+  *     the parallel prefix take);
+  *  2. one transpose of the prefix to (column, value) pairs, counted per
+  *     distinct pair, then per column: the distinct count, the non-null
+  *     count and every type and date-format vote, each vote the summed
+  *     multiplicity of the distinct values that pass it. Every value is
+  *     parsed once per distinct (column, value), not once per cell.
   *
   * Intended-semantics divergences (SURVEY.md §2b):
   *  - Q1/Q3: integers beyond ±2^31−1 infer as `LongType` (the reference
@@ -57,27 +62,27 @@ object TypeInference {
   private val IntMin = Int.MinValue.toLong
   private val IntMax = Int.MaxValue.toLong
 
-  /** Infer a schema for `df` (any input types; cells are canonicalized
-    * as strings first, mirroring the CSV path). One count job + one
-    * aggregation job. */
-  // step timers to stderr when SPARK_GRAFT_INGEST_DEBUG is set — the
-  // CLI's -v phase timers are reference-shaped (coarse); this is the
-  // inference-internal breakdown for perf work
-  private def dbg[A](what: String)(body: => A): A =
-    if (!sys.env.contains("SPARK_GRAFT_INGEST_DEBUG")) body
-    else {
-      val t0 = System.nanoTime()
-      val a = body
-      System.err.println(
-        s"[infer] $what: ${(System.nanoTime() - t0) / 1000000} ms")
-      a
-    }
+  /** Shape guards in front of the numeric `try_cast`s. Each accepts a
+    * superset of what its cast accepts (PropertySpec checks this), so
+    * the cast decides every value that reaches it and a value of the
+    * wrong shape never reaches it: Spark 4.1 runs a TRY cast through the
+    * ANSI path and catches the error, which cost ~8 µs per failing cell
+    * for BIGINT, and `Double.valueOf` throws a `NumberFormatException`
+    * per non-numeric cell. The padding class is what the casts trim:
+    * ASCII controls and space, plus DEL for BIGINT (`UTF8String.trimAll`).
+    * DOUBLE is `Double.valueOf`'s grammar (`f`/`d` suffixes, hex floats)
+    * plus Spark's case-insensitive `inf`/`infinity`/`nan` literals. */
+  private[ingest] val BigintGuard =
+    "^[\\x00-\\x20\\x7f]*[+-]?[0-9]+[\\x00-\\x20\\x7f]*$"
+  private[ingest] val DoubleGuard =
+    "(?i)^[\\x00-\\x20]*[+-]?(nan|inf|infinity|" +
+    "([0-9]+\\.?[0-9]*|\\.[0-9]+)(e[+-]?[0-9]+)?[fd]?|" +
+    "0x([0-9a-f]+\\.?[0-9a-f]*|\\.[0-9a-f]+)p[+-]?[0-9]+[fd]?)[\\x00-\\x20]*$"
 
+  /** Infer a schema for `df` (any input types; cells are canonicalized
+    * as strings first, mirroring the CSV path). */
   def infer(df: DataFrame, parseDates: Boolean = false,
       scanCap: Long = DefaultScanCap): IngestSchema = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     val cols = df.columns.toSeq
     // ONE narrow pass yields both the full row count (Σ per-partition)
     // and the per-partition counts the parallel prefix take needs —
@@ -86,9 +91,9 @@ object TypeInference {
     // (measured: 36.6 s of the 41 s lineitem-sf0.1 CLI ingest ran the
     // inference on a single core; at a 100 TB input the 2M-row capped
     // prefix would still funnel ~hundreds of MB through one task).
-    val pidCounts = dbg("count")(df
+    val pidCounts = df
       .groupBy(spark_partition_id().as("__pid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val n = pidCounts.map(_._2).sum
     if (n == 0 || cols.isEmpty) {
       // index.js:134 — empty input → empty result
@@ -107,8 +112,9 @@ object TypeInference {
     // order limit() consumes), and `monotonically_increasing_id` is
     // (pid << 33) + row-in-partition, so the local row number needs no
     // shuffle at all. The broadcast of the per-partition quota frame
-    // is P rows. Partitions past the boundary take 0 rows and finish
-    // on file-open. Same row SET as df.limit(limitRows).
+    // is P rows. Partitions past the boundary take 0 rows, but the
+    // filter does not stop the scan: each still parses its whole split.
+    // Same row SET as df.limit(limitRows).
     val sp = df.sparkSession
     val offsets = pidCounts.scanLeft(0L)(_ + _._2)
     val need = pidCounts.zip(offsets).map { case ((pid, cnt), off) =>
@@ -121,84 +127,66 @@ object TypeInference {
         shiftleft(spark_partition_id().cast(LongType), 33))
       .join(broadcast(needDf), "__pid")
       .filter(col("__lrn") < col("__need"))
-    // everything downstream — the per-format strict date parses and
-    // the distinct transpose — fans across the executor pool; one
-    // round-robin exchange of the bounded prefix (≤ scanCap narrow
-    // rows, the cheap side) feeds it. Pure repartition of a counted
-    // multiset: every aggregate below is partition-order-insensitive,
-    // so the inferred schema is byte-identical.
-    val par = math.max(1, df.sparkSession.sparkContext.defaultParallelism)
+    // the transpose and its parses fan across the executor pool; one
+    // round-robin exchange of the bounded prefix (≤ scanCap narrow rows,
+    // the cheap side) feeds it. Every aggregate below is a count or a
+    // sum of counts, so the inferred schema does not depend on
+    // partitioning.
+    val par = math.max(1, sp.sparkContext.defaultParallelism)
     val canon = prefix.repartition(par).select(
       cols.zipWithIndex.map { case (c, i) =>
         Nulls.canonicalize(col(c).cast(StringType)).as(s"c$i")
       }: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val aggs = cols.indices.flatMap { i =>
-      val c = col(s"c$i")
-      Seq(
-        count(c).as(s"nn_$i"),
-        count(expr(s"try_cast(c$i AS BIGINT)")).as(s"lng_$i"),
-        count(when(expr(s"try_cast(c$i AS BIGINT)").between(IntMin, IntMax),
-          1)).as(s"int_$i"),
-        count(expr(s"try_cast(c$i AS DOUBLE)")).as(s"dbl_$i")
-      ) ++ (if (parseDates) Dates.Formats.zipWithIndex.map { case (f, k) =>
-        sum(Dates.parses(c, f)).as(s"fmt${k}_$i")
-      } else Nil) ++
-        (if (parseDates) Dates.TimestampFormats.zipWithIndex.map {
-          case (f, k) => sum(Dates.tparses(c, f)).as(s"tfmt${k}_$i")
-        } else Nil)
-    }
-    // Distinct counts run as their OWN transpose job, not as
-    // `count_distinct` columns in the agg above: N count_distincts in
-    // one aggregate plan through an Expand that multiplies the scan
-    // ×(N+1) and whose generated projections (N+1 rows × every agg
-    // buffer) blow whole-stage codegen into janino-compile seconds of
-    // pure fixed cost (measured ~6 s of an 8.7 s inference phase on a
-    // 4.5k-row, 8-column file). The transpose is linear and
-    // codegen-small: explode to (column-index, value), two-phase
-    // distinct, count per column — still EXACT, same numbers.
-    // materialize the cached prefix with one cheap job, then run the
-    // two independent consumers CONCURRENTLY — the type-vote agg (the
-    // per-format parse work) and the distinct transpose each leave
-    // most of the core pool idle between stages; overlapping them
-    // costs nothing on a cluster (shared executor pool) and turns
-    // sequential job latency into max() on a single node
-    dbg("materialize")(canon.count())
-    val aggF = Future(
-      dbg("agg")(canon.agg(aggs.head, aggs.tail: _*).collect()(0)))
-    val dctRows = dbg("dct")(canon
+    // Transpose to (column, value) and count each distinct pair (m), so
+    // the votes below parse each distinct value once and weigh it by m:
+    // "every non-null value passes" is still vote == nn. The aggregate
+    // has at most 16 columns whatever the column count, under
+    // spark.sql.codegen.maxFields, so it keeps whole-stage codegen; and
+    // it never plans N count_distincts, whose Expand multiplies the
+    // scan ×(N+1) (measured ~6 s of janino compile on an 8-column file).
+    val v = col("v")
+    val m = col("m")
+    def votes(p: Column): Column = sum(when(p, m).otherwise(0L))
+    val dateVotes = if (!parseDates) Nil else
+      Dates.Formats.zipWithIndex.map { case (f, k) =>
+        votes(Dates.parses(v, f)).as(s"fmt$k") } ++
+      Dates.TimestampFormats.zipWithIndex.map { case (f, k) =>
+        votes(Dates.tparses(v, f)).as(s"tfmt$k") }
+    val rows = canon
       .select(posexplode(array(cols.indices.map(i => col(s"c$i")): _*))
         .as(Seq("i", "v")))
-      .where(col("v").isNotNull)
-      .groupBy("i", "v").agg(first(lit(1)))
-      .groupBy("i").agg(count(lit(1)).as("dct"))
-      .collect())
-    val dcts = dctRows.map(row => row.getInt(0) -> row.getLong(1)).toMap
-    val r = dbg("agg-await")(Await.result(aggF, Duration.Inf))
-    canon.unpersist(blocking = false)
+      .where(v.isNotNull)
+      .groupBy("i", "v").agg(count(lit(1)).as("m"))
+      .withColumn("l",
+        when(v.rlike(BigintGuard), expr("try_cast(v AS BIGINT)")))
+      .groupBy("i").agg(count(lit(1)).as("dct"), (Seq(
+        sum(m).as("nn"),
+        votes(col("l").isNotNull).as("lng"),
+        votes(col("l").between(IntMin, IntMax)).as("int"),
+        votes(v.rlike(DoubleGuard) &&
+          expr("try_cast(v AS DOUBLE)").isNotNull).as("dbl")) ++
+        dateVotes): _*)
+      .collect().map(r => r.getInt(0) -> r).toMap
     val thresh = Categorical.threshold(n, scan)
     val fields = cols.zipWithIndex.map { case (c, i) =>
-      val nn = r.getAs[Long](s"nn_$i")
-      val lng = r.getAs[Long](s"lng_$i")
-      val intOk = r.getAs[Long](s"int_$i")
-      val dbl = r.getAs[Long](s"dbl_$i")
-      val dct = dcts.getOrElse(i, 0L)
-      val surviving = if (parseDates && nn > 0)
-        Dates.Formats.zipWithIndex.filter { case (_, k) =>
-          Option(r.getAs[Any](s"fmt${k}_$i"))
-            .exists(_.asInstanceOf[Long] == nn)
-        }.map(_._1)
-      else Nil
+      // an all-null column has no (column, value) pair: nn = dct = 0
+      val r = rows.get(i)
+      def get(name: String): Long = r.fold(0L)(_.getAs[Long](name))
+      val nn = get("nn")
+      val lng = get("lng")
+      val intOk = get("int")
+      val dbl = get("dbl")
+      val dct = get("dct")
+      def survivors(fmts: Seq[String], prefix: String): Seq[String] =
+        if (parseDates && nn > 0)
+          fmts.indices.filter(k => get(s"$prefix$k") == nn).map(fmts)
+        else Nil
+      val surviving = survivors(Dates.Formats, "fmt")
       // datetime lattice step (extension — the date and timestamp
       // candidate families are disjoint on any single value: a 8–10
       // char date can never parse a 14+ char datetime pattern and vice
       // versa, so the two votes cannot both survive)
-      val tsSurviving = if (parseDates && nn > 0)
-        Dates.TimestampFormats.zipWithIndex.filter { case (_, k) =>
-          Option(r.getAs[Any](s"tfmt${k}_$i"))
-            .exists(_.asInstanceOf[Long] == nn)
-        }.map(_._1)
-      else Nil
+      val tsSurviving = survivors(Dates.TimestampFormats, "tfmt")
       val (dt, fmt): (DataType, Option[String]) =
         if (nn == 0) (IntegerType, None) // all-null seeds int32, index.js:183-185
         else if (lng == nn && intOk == nn) (IntegerType, None)

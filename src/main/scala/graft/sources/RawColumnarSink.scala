@@ -40,7 +40,7 @@ object RawColumnarSink {
   private def leF(f: Float): Array[Byte] =
     ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putFloat(f).array()
 
-  private def jsonStr(s: String): String =
+  private[graft] def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

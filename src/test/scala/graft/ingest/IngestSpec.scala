@@ -68,6 +68,80 @@ class IngestSpec extends AnyFunSuite {
       StringType)
   }
 
+  def frame(cols: (String, Seq[String])*): org.apache.spark.sql.DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val rows = cols.map(_._2).transpose.map(org.apache.spark.sql.Row(_: _*))
+    spark.createDataFrame(rows.asJava,
+      StructType(cols.map(c => StructField(c._1, StringType))))
+  }
+
+  test("votes are weighted by multiplicity: one misfit or many demotes") {
+    val ints = Seq.tabulate(60)(i => (i % 7).toString)
+    val s = TypeInference.infer(frame(
+      "many" -> (ints.take(40) ++ Seq.fill(20)("x")),
+      "one" -> (ints.take(59) :+ "x"),
+      "dbl" -> (ints.take(50) ++ Seq.fill(10)("2.5")),
+      "int" -> ints))
+    val byName = s.fields.map(f => f.name -> f).toMap
+    assert(byName("many").dataType == StringType)
+    assert(byName("one").dataType == StringType)
+    assert(byName("dbl").dataType == DoubleType)
+    assert(byName("int").dataType == IntegerType)
+    assert(byName("many").distinct == 8 && byName("int").distinct == 7)
+  }
+
+  test("a date value that parses two ways keeps its column a string") {
+    // 1/2/2011 parses as d/M/yyyy and as M/d/yyyy, once or thirty times;
+    // one value that parses one way only locks that format
+    val s = TypeInference.infer(frame(
+      "same" -> Seq.fill(30)("1/2/2011"),
+      "once" -> ("1/2/2011" +: Seq.fill(29)(null)),
+      "locked" -> (Seq.fill(29)("1/2/2011") :+ "13/2/2011")),
+      parseDates = true)
+    assert(s.fields.map(_.dataType) == Seq(StringType, StringType, DateType))
+    assert(s.fields.map(_.dateFormat) == Seq(None, None, Some("d/M/yyyy")))
+  }
+
+  test("an all-null column infers IntegerType with distinct = 0") {
+    val s = TypeInference.infer(frame(
+      "a" -> Seq("1", "2", "3"), "nulls" -> Seq(null, "null", "")),
+      parseDates = true)
+    val f = s.fields(1)
+    assert(f.dataType == IntegerType && f.distinct == 0)
+    assert(s.fields(0).dataType == IntegerType && s.fields(0).distinct == 3)
+  }
+
+  test("the inferred schema does not depend on the split layout") {
+    // 3000 rows: the 1000-row prefix is a strict subset, so a split
+    // layout that changed which rows are first would show
+    val dir = java.nio.file.Files.createTempDirectory("graft_splits")
+    val f = dir.resolve("t.csv")
+    val rows = (0 until 3000).map { i =>
+      val late = if (i >= 2000) "x" else (i % 9).toString
+      s"$i,${i * 7 % 13}.5,${2000 + i % 20}-${1 + i % 12}-${1 + i % 28}," +
+        s"${i % 5},$late,${if (i % 3 == 0) "null" else s"w${i % 40}"}"
+    }
+    java.nio.file.Files.writeString(f,
+      "id,score,day,seg,late,txt\n" + rows.mkString("\n") + "\n")
+    def inferred(): (Int, IngestSchema) = {
+      val df = Collimate.read(spark, f.toString)
+      (df.rdd.getNumPartitions, TypeInference.infer(df, parseDates = true))
+    }
+    val (p1, one) = inferred()
+    val bytes = java.nio.file.Files.size(f)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (bytes / 7 + 1).toString)
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    val (p7, seven) = try inferred() finally {
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      spark.conf.unset("spark.sql.files.openCostInBytes")
+    }
+    assert(p1 == 1 && p7 == 7)
+    assert(one == seven)
+    assert(one.fields.map(_.dataType) == Seq(IntegerType, DoubleType,
+      DateType, IntegerType, IntegerType, StringType))
+    graft.Util.rmrf(dir.toFile)
+  }
+
   test("dates disabled without the -d flag") {
     assert(typesOf(fixture("dates_iso.csv"))("d") == StringType)
   }
@@ -356,6 +430,24 @@ class IngestSpec extends AnyFunSuite {
     val names = Seq(" First-Name ", "A&B", "price %", "email@addr",
       "x  y", "__z__", "weird!!name??", "95% conf.", "a-b-c")
     names.foreach(n => assert(Sanitize(Sanitize(n)) == Sanitize(n)))
+  }
+
+  test("index.json escapes control characters in headers") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_index_esc")
+    val f = dir.resolve("t.csv")
+    java.nio.file.Files.writeString(f, "id,\"a\tb\"\n1,x\n2,y\n")
+    val out = dir.resolve("out").toString
+    val opts = Collimate.Options(writeIndex = true)
+    Collimate.write(Collimate(spark, f.toString), out, opts)
+    val idx = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$out/index.json"))
+    // Jackson rejects unescaped control characters inside strings
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(idx)
+    assert(tree.get("a\tb").get("column").asText() == "a_b")
+    // ordinary names are written exactly as before
+    assert(idx.startsWith(
+      "{\"id\": {\"column\": \"id\", \"type\": \"int\", \"categorical\": false},\n "))
+    graft.Util.rmrf(dir.toFile)
   }
 
   test("roundtrip: write parquet + index sidecar (O13/O14)") {
